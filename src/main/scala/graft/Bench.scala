@@ -415,165 +415,10 @@ object Bench {
     val startedAt = java.time.Instant.ofEpochMilli(runId).toString
     val t0Nanos = System.nanoTime()
 
-    /** First field of /proc/loadavg (1-min runnable average) — the
-      * host-contention witness for the r5/r6 one-entry-stalled-10×
-      * bench class. -1.0 where the interface is absent.
-      */
-    def loadavg1(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    /** `some avg10` from /proc/pressure/<res> (fraction of the last
-      * 10 s any task was stalled on the resource).
-      */
-    def psi(res: String): Double =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"/proc/pressure/$res")), "UTF-8")
-        val m = java.util.regex.Pattern.compile("some avg10=([0-9.]+)")
-          .matcher(txt)
-        if (m.find()) m.group(1).toDouble else -1.0
-      } catch { case _: Throwable => -1.0 }
-    val loadStart = loadavg1()
-
-    /** Cumulative stop-the-world collection time across all collector
-      * beans (ms). Deltas across a timed run body attribute a slow run
-      * to GC directly from the artifact — the r5–r7 x30 wobble shows
-      * low cpu PSI with high runnable counts, which is in-JVM service
-      * work; this row names (or exonerates) the collector.
-      */
-    def gcMsTotal(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    /** Cumulative JIT compilation time (ms) — a first-run-only spike
-      * here is codegen/C2 warmup, the expected non-steady-state cost
-      * min-of-n exists to absorb.
-      */
-    def jitMsTotal(): Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else -1L
-    }
-
-    /** Summed executor task run time (ms) since the listener attached —
-      * deltas across a run body give the per-run `task_sec` diag row.
-      * The listener bus is async, so reads go through
-      * [[settledTaskMs]], which waits for the counter to stop moving.
-      */
-    val taskMsAcc = new java.util.concurrent.atomic.AtomicLong()
-    // task COUNT (r22): per-run deltas land in the diag's task_n rows —
-    // the row the r21 scaling probe lacked (it could not tell "entry
-    // launches 3 tasks" from "entry ignores the core knob")
-    val taskNAcc = new java.util.concurrent.atomic.AtomicLong()
-    // spill (cumulative; per-run delta) and peak per-task execution
-    // memory (max over the run; reset before each) — the r7 verdict's
-    // ask #3 witness pair for x10_q122: its slow runs carried 4.7–11.6 s
-    // GC where x30 (3× the data) carried 0.1–1 s, and these rows say
-    // whether that GC was memory pressure (spill>0 / peak near the
-    // per-task share) or collateral of a host-delivery stall (both ~0)
-    val spillBytesAcc = new java.util.concurrent.atomic.AtomicLong()
-    val peakExecAcc = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) {
-            val m = e.taskMetrics
-            taskMsAcc.addAndGet(m.executorRunTime): Unit
-            taskNAcc.incrementAndGet(): Unit
-            spillBytesAcc.addAndGet(
-              m.memoryBytesSpilled + m.diskBytesSpilled): Unit
-            peakExecAcc.getAndAccumulate(m.peakExecutionMemory,
-              (a: Long, b: Long) => math.max(a, b)): Unit
-          }
-      })
-    def settledTaskMs(): Long = {
-      var prev = -1L
-      var v = taskMsAcc.get()
-      var waited = 0
-      while (v != prev && waited < 1000) {
-        prev = v; Thread.sleep(50); waited += 50; v = taskMsAcc.get()
-      }
-      v
-    }
-    /** Generated-class compilations since JVM start (Janino cache
-      * misses). A steady per-run delta on a REPEATED identical query
-      * is codegen-cache thrash — see GraftSession's
-      * spark.sql.codegen.cache.maxEntries note.
-      */
-    def janinoCompiles(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
-    /** Fixed-work single-thread spin (~40 ms on an unloaded core):
-      * measures the host's DELIVERED cpu speed at this instant. The
-      * r5–r7 stall class stretches wall clocks 3–12× while every
-      * guest-visible pressure counter (steal, PSI, loadavg, cgroup
-      * throttle) reads quiet — this canary is the only in-artifact
-      * witness that the slowdown was beneath the guest. The sink
-      * defeats dead-code elimination; the warmup loop at bench start
-      * takes the canary itself out of JIT-warmup territory.
-      */
-    @volatile var canarySink = 0L
-    def spin(): Long = {
-      var x = 0x9E3779B97F4A7C15L; var i = 0
-      while (i < 20000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      x
-    }
-    def canaryMsNow(): Double = {
-      val t0 = System.nanoTime()
-      canarySink = spin()
-      (System.nanoTime() - t0) / 1e6
-    }
-    /** The same fixed spin on every core at once (wall of the slowest
-      * of `cpus` threads). The r7 stall signature is a FAST
-      * single-thread canary beside 10–50× inflated summed task time on
-      * unchanged task counts: the hypervisor briefly delivers only a
-      * few cores' worth of cycles to the 32-vCPU guest, which a lone
-      * spinning thread never notices. Single ~43 ms + parallel ≫
-      * single ⇒ the entry ran during such an episode.
-      */
-    def canaryParMsNow(): Double = {
-      val n = cpus.toInt
-      val t0 = System.nanoTime()
-      val ts = (1 to n).map { _ =>
-        val th = new Thread(() => { canarySink = spin() })
-        th.start(); th
-      }
-      ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e6
-    }
-    /** JIT'd-code footprint (MB used across the CodeHeap pools). Near
-      * ReservedCodeCacheSize the sweeper flushes warm methods and
-      * compiled code silently degrades to interpreted — high task cpu
-      * with LOW jit_ms and no console banner. Sampled after each run.
-      */
-    def codeCacheMb(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.startsWith("CodeHeap") ||
-          p.getName == "Code Cache")
-        .map(_.getUsage.getUsed).sum / (1L << 20)
-    }
-    /** Steal fraction (%) of all cpu ticks between two samples — the
-      * only guest-visible counter that records hypervisor descheduling
-      * itself. Sampled across each run body.
-      */
-    def cpuTicks(): (Long, Long) =
-      try {
-        val f = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-          .linesIterator.next().split("\\s+")
-        val vals = f.drop(1).map(_.toLong)
-        // denominator = user..steal (first 8 fields) only: guest and
-        // guest_nice are already folded into user/nice by the kernel,
-        // so summing them double-counts guest time and underestimates
-        // steal_pct on VM hosts
-        (if (vals.length > 7) vals(7) else 0L, vals.take(8).sum)
-      } catch { case _: Throwable => (0L, 0L) }
-    (1 to 5).foreach(_ => canaryMsNow())
+    // host, JVM and task witnesses sampled around every run (the
+    // same samplers tools.Profile prints)
+    val witness = new Witness(spark, cpus.toInt)
+    val loadStart = witness.loadavg1()
     /** Healthy-delivery reference for the all-core canary: the MINIMUM
       * reading observed anywhere this bench run (seeded with three
       * startup samples after JIT warmup). Self-calibrating — if the
@@ -581,8 +426,8 @@ object Bench {
       * retries in best() simply never fire, same as the pre-r7 bench.
       */
     var nominalParMs: Double = {
-      canaryParMsNow(): Unit // JIT-warm the parallel path itself
-      (1 to 3).map(_ => canaryParMsNow()).min
+      witness.canaryParMsNow(): Unit // JIT-warm the parallel path itself
+      (1 to 3).map(_ => witness.canaryParMsNow()).min
     }
     // ── roster-start quiet-window gate (r10 verdict ask #2) ─────────
     // The r10 official run opened at load1 5.16 and began immediately,
@@ -600,7 +445,7 @@ object Bench {
     val startGateRef = historicalNominalParMs(
       java.nio.file.Paths.get("bench_diag")).getOrElse(nominalParMs)
     val (startWaitSec, startReads) =
-      awaitQuietWindow(() => canaryParMsNow(), startGateRef,
+      awaitQuietWindow(() => witness.canaryParMsNow(), startGateRef,
         budgetSec = StartGateBudgetSec, quietRatio = StartGateRatio)
     // keyed on whether any STALE reading was observed, not waited>0
     // (r12 ADVICE): the two-consecutive-quiet predicate makes even a
@@ -619,7 +464,7 @@ object Bench {
       // samples let the self-calibrating nominal start from the
       // healthy floor instead of the storm's
       nominalParMs =
-        math.min(nominalParMs, (1 to 3).map(_ => canaryParMsNow()).min)
+        math.min(nominalParMs, (1 to 3).map(_ => witness.canaryParMsNow()).min)
     } else System.err.println(s"[bench] start gate: canary " +
       s"${startReads.mkString("/")}ms vs historical nominal " +
       s"${startGateRef}ms at ${StartGateRatio}x — quiet launch, " +
@@ -691,11 +536,11 @@ object Bench {
       // appended after each RUN (in best()), so rebuilding here would
       // silently drop the earlier runs' deltas
       entryEnv(entry) = prev.copy(
-        loadavg1 = prev.loadavg1 :+ loadavg1(),
-        psiCpu = prev.psiCpu :+ psi("cpu"),
-        psiIo = prev.psiIo :+ psi("io"),
+        loadavg1 = prev.loadavg1 :+ witness.loadavg1(),
+        psiCpu = prev.psiCpu :+ witness.psi("cpu"),
+        psiIo = prev.psiIo :+ witness.psi("io"),
         tOffsetSec = prev.tOffsetSec :+ (System.nanoTime() - t0Nanos) / 1e9,
-        canaryMs = prev.canaryMs :+ math.rint(canaryMsNow() * 10) / 10)
+        canaryMs = prev.canaryMs :+ math.rint(witness.canaryMsNow() * 10) / 10)
     }
     def timed(body: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -720,18 +565,9 @@ object Bench {
       */
     def instrumentedRun(entry: String, body: => Double): Double = {
       prepare(entry)
-      // gc/jit sampled AFTER prepare: prepare's own System.gc() is
-      // deliberate hygiene, not part of the run being attributed
-      val gc0 = gcMsTotal(); val jit0 = jitMsTotal()
-      val task0 = settledTaskMs(); val jan0 = janinoCompiles()
-      // read AFTER settledTaskMs drained the listener bus, so the
-      // count is settled at the same instant as the time
-      val taskN0 = taskNAcc.get()
-      // settledTaskMs above already waited for the listener bus to
-      // drain, so the spill counter is settled too; peak resets here
-      val spill0 = spillBytesAcc.get(); peakExecAcc.set(0)
-      val (steal0, tick0) = cpuTicks()
-      // walls are recorded PRE-ROUNDED to the 3 decimals the diag
+      // witness samples start AFTER prepare: prepare's own System.gc()
+      // is deliberate hygiene, not part of the run being attributed.
+      // Walls are recorded PRE-ROUNDED to the 3 decimals the diag
       // renders (r12 ADVICE): the live storm stamp judges the
       // full-precision wall while DiagAudit recomputes from the
       // rendered diag, so a run sitting exactly on the 1.5x wall gate
@@ -742,29 +578,19 @@ object Bench {
       // diag's %.3f render and json parse — live and recomputed
       // verdicts read the same value. A failed run's -1.0 is a fixed
       // point of the rounding.
-      val t = math.rint(body * 1000) / 1000
-      val (steal1, tick1) = cpuTicks()
+      val (t, s) = witness.measure(math.rint(body * 1000) / 1000)
+      // best delivery seen
+      if (s.canaryParMs < nominalParMs) nominalParMs = s.canaryParMs
       val e = entryEnv(entry)
-      entryEnv(entry) = e.copy(gcMs = e.gcMs :+ (gcMsTotal() - gc0),
-        jitMs = e.jitMs :+ (if (jit0 < 0) -1L else jitMsTotal() - jit0),
-        taskSec = e.taskSec :+
-          math.rint((settledTaskMs() - task0) / 100.0) / 10,
-        taskN = e.taskN :+ (taskNAcc.get() - taskN0),
-        janino = e.janino :+ (janinoCompiles() - jan0),
-        canaryAfterMs = e.canaryAfterMs :+
-          math.rint(canaryMsNow() * 10) / 10,
-        canaryParMs = e.canaryParMs :+ {
-          val p = math.rint(canaryParMsNow() * 10) / 10
-          if (p < nominalParMs) nominalParMs = p // best delivery seen
-          p
-        },
-        stealPct = e.stealPct :+ (if (tick1 > tick0)
-          math.rint(10000.0 * (steal1 - steal0) / (tick1 - tick0)) / 100
-        else -1.0),
-        codeCacheMb = e.codeCacheMb :+ codeCacheMb(),
-        spillMb = e.spillMb :+
-          (spillBytesAcc.get() - spill0) / (1L << 20),
-        peakExecMb = e.peakExecMb :+ peakExecAcc.get() / (1L << 20))
+      entryEnv(entry) = e.copy(gcMs = e.gcMs :+ s.gcMs,
+        jitMs = e.jitMs :+ s.jitMs, taskSec = e.taskSec :+ s.taskSec,
+        taskN = e.taskN :+ s.taskN, janino = e.janino :+ s.janino,
+        canaryAfterMs = e.canaryAfterMs :+ s.canaryAfterMs,
+        canaryParMs = e.canaryParMs :+ s.canaryParMs,
+        stealPct = e.stealPct :+ s.stealPct,
+        codeCacheMb = e.codeCacheMb :+ s.codeCacheMb,
+        spillMb = e.spillMb :+ s.spillMb,
+        peakExecMb = e.peakExecMb :+ s.peakExecMb)
       graft.ext.Dedup.lastMinhashDiag.foreach { d =>
         candSecs(entry) =
           candSecs.getOrElse(entry, Seq.empty) :+
@@ -936,7 +762,7 @@ object Bench {
     // nominal on both sides.
     val cooldowns = scala.collection.mutable.LinkedHashMap[String, String]()
     def coolDown(group: String): Unit = {
-      val (w, reads) = awaitQuietWindow(() => canaryParMsNow(),
+      val (w, reads) = awaitQuietWindow(() => witness.canaryParMsNow(),
         nominalParMs, budgetSec = 60)
       cooldowns(group) = BenchReport.gateJson(w, nominalParMs, reads)
       if (w > 0) System.err.println(s"[bench] cool-down before $group: " +
@@ -1160,7 +986,7 @@ object Bench {
           // one shared implementation (round 11) — here drawing down
           // the pass-wide budget so a storm that outlives the first
           // wait doesn't consume every remaining revisit inside itself
-          val (w, reads) = awaitQuietWindow(() => canaryParMsNow(),
+          val (w, reads) = awaitQuietWindow(() => witness.canaryParMsNow(),
             nominalParMs, backoffBudgetSec)
           backoffBudgetSec -= w
           if (w > 0) System.err.println(s"[bench] revisit ($context): " +
@@ -1267,7 +1093,7 @@ object Bench {
       System.err.println(s"[bench] entries needing environment " +
         s"discount: ${discounted.mkString(", ")}")
     val line = BenchReport.contractLine(results, sfDir, runId,
-      loadStart, loadavg1(), discounted, cpus = cpus.toInt)
+      loadStart, witness.loadavg1(), discounted, cpus = cpus.toInt)
     // self-adjudication (r8 verdict ask #4): every official-scale run
     // writes ADJUDICATION_r{N}.md itself, so each round ships its own
     // classification without being asked. Runs BEFORE the contract

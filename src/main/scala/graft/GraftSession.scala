@@ -35,7 +35,7 @@ object GraftSession {
       // fragment working set (q86 compiles 92), so repeated executions
       // self-evict and re-compile ~41 fragments EVERY run — measured
       // as 8–50 s of HotSpot JIT per q86 execution and the dominant
-      // term of the r7 x10 bench wobble (tools/ProfileEntry's
+      // term of the r7 x10 bench wobble (the witness panel's
       // janino_compiles row: 41/run at 100 entries, 0/run once the
       // cache fits). On a cluster the same churn repeats per executor
       // per job. 1000 was A/B'd against 256 over the full 44-entry

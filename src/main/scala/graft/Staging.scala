@@ -60,10 +60,6 @@ object Staging {
     Files.deleteIfExists(p): Unit
   }
 
-  /** Materialize `df` once into a temp parquet dir; return a reader
-    * over it. All columns come back nullable (parquet round-trip) —
-    * same as any staged table read, and invisible to value semantics.
-    */
   /** Staging root: `GRAFT_STAGE_DIR` (env) when set, else the JVM temp
     * dir. local[*] is fine with the default; a MULTI-NODE deployment
     * must point this at storage every executor and the driver share
@@ -85,6 +81,10 @@ object Staging {
       java.nio.file.Files.createTempDirectory(s"graft-stage-$tag-")
   }
 
+  /** Materialize `df` once into a temp parquet dir; return a reader
+    * over it. All columns come back nullable (parquet round-trip) —
+    * same as any staged table read, and invisible to value semantics.
+    */
   def checkpoint(df: DataFrame, tag: String): DataFrame = {
     val dir = mkStageDir(tag)
     tracked.add(dir)
@@ -104,26 +104,37 @@ object Staging {
     * would have planned over.
     */
   def checkpointCounted(df: DataFrame, tag: String): (DataFrame, Long) = {
-    val dir = mkStageDir(tag)
-    tracked.add(dir)
-    df.write.mode("overwrite").parquet(dir.toString)
-    (df.sparkSession.read.parquet(dir.toString), parquetRowCount(dir))
+    val staged = checkpoint(df, tag)
+    (staged, stagedRowCount(staged))
   }
 
-  /** Sum of footer record counts across a staged dir's parquet files. */
-  private def parquetRowCount(dir: java.nio.file.Path): Long = {
-    import scala.jdk.CollectionConverters._
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val s = java.nio.file.Files.list(dir)
-    try s.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
+  /** Row count of a staged frame — a bare parquet read such as
+    * [[checkpoint]] or a [[scope]] stager returns — summed from its
+    * files' footers on the driver, with no Spark job. Any other frame
+    * (filtered, cached, not parquet) is counted by `count()`, since
+    * its footers do not describe its rows.
+    */
+  def stagedRowCount(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val parquetScan = df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.fileFormat.isInstanceOf[ParquetFileFormat]
+        case _ => false
+      }
+      case _ => false
+    }
+    if (!parquetScan) df.count()
+    else {
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      df.inputFiles.iterator.map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toUri), conf)
+          new org.apache.hadoop.fs.Path(f), conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-    finally s.close()
+    }
   }
 
   /** Global sort of an output-scale result whose PLAN is expensive.
@@ -143,18 +154,9 @@ object Staging {
     * registry's text/dedup family); a cheap plan pays more for the
     * parquet round-trip than the second traversal costs.
     */
-  /** Diag/test escape hatch for [[stagedSort]]: when false it degrades
-    * to the live `orderBy` it replaces, so one JVM can A/B the two
-    * shapes over the same registered queries (tools.ProfileSort — the
-    * per-query keep/revert evidence). Production default is true;
-    * nothing outside diag tooling flips it.
-    */
-  @volatile var sortStagingEnabled: Boolean = true
-
   def stagedSort(df: DataFrame, tag: String)(
       keys: org.apache.spark.sql.Column*): DataFrame =
-    if (sortStagingEnabled) checkpoint(df, tag).orderBy(keys: _*)
-    else df.orderBy(keys: _*)
+    checkpoint(df, tag).orderBy(keys: _*)
 
   /** [[stagedSort]] for callers that KNOW an upper bound on the result
     * rows (r22, guide §2.4): below `smallLimit` the result is globally
@@ -172,8 +174,7 @@ object Staging {
   def boundedSort(df: DataFrame, rowBound: Long, tag: String,
       smallLimit: Long = 1L << 20)(
       keys: org.apache.spark.sql.Column*): DataFrame =
-    if (!sortStagingEnabled) df.orderBy(keys: _*)
-    else if (rowBound <= smallLimit)
+    if (rowBound <= smallLimit)
       df.repartition(1).sortWithinPartitions(keys: _*)
     else stagedSort(df, tag)(keys: _*)
 

@@ -697,7 +697,7 @@ object Dedup {
     val candidates = stager(
       capped.join(broadcast(newBands), Seq("band_id", "band_hash"))
         .select(col("new_id"), col("old_id")).distinct(), "inc-cands")
-    val nPairs = candidates.count()
+    val nPairs = graft.Staging.stagedRowCount(candidates)
     lastMinhashDiag = Some(MinhashDiag(nPairs,
       if (nPairs <= broadcastPairLimit) "broadcast" else "shuffle",
       (System.nanoTime() - tCand0) / 1e9))

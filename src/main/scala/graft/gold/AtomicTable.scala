@@ -47,8 +47,8 @@ import scala.util.control.NonFatal
 object AtomicTable {
 
   /** Optional phase-timing sink (name, seconds) — a diag hook in the
-    * [[graft.ext.Dedup.lastMinhashDiag]] mold: profiling tools
-    * (ProfileQ93) set it to attribute merge cost to its internal
+    * [[graft.ext.Dedup.lastMinhashDiag]] mold: `graft.tools.Profile`
+    * sets it around each run to attribute merge cost to its internal
     * phases; `None` (the default) is zero-overhead. Not part of any
     * query semantics.
     */

@@ -52,7 +52,7 @@ object CurationQueries {
     QueryDef(
       "q89_decontamination",
       (s, dir) =>
-        // live sort: ProfileSort A/B put the staged variant at 1.27x
+        // live sort: live-vs-staged A/B put the staged variant at 1.27x
         // (1x) / 1.06 (x10) — the round-trip loses here
         q89Core(s, dir).orderBy(col("train_id"), col("eval_id")),
       Some("""

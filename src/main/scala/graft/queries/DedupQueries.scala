@@ -96,7 +96,7 @@ object DedupQueries {
               / (col("sz_a") + col("sz_b") - col("inter")).cast("double"), 6))
           .filter(col("jaccard_sim") >= 0.05)
           .select(col("doc_id_a"), col("doc_id_b"), col("jaccard_sim"))
-          // live sort: ProfileSort A/B — the resample's second
+          // live sort: live-vs-staged A/B — the resample's second
           // traversal costs less than a staged round-trip here
           // (x10 ratio 1.11, 1x 1.06); contrast q65, which stages
           .orderBy(col("doc_id_a"), col("doc_id_b"))
@@ -410,7 +410,7 @@ object DedupQueries {
             sum(when(col("ndocs") > 1, 1L).otherwise(0L)).as("n_dup_blocks"),
             round(sum(when(col("ndocs") > 1, 1L).otherwise(0L)).cast("double")
               / count(lit(1)).cast("double"), 4).as("dup_block_frac"))
-          // live sort: doc-scale output; ProfileSort A/B ratios
+          // live sort: doc-scale output; live-vs-staged A/B ratios
           // 1.22 (1x) / 0.99 (x10) — the staged round-trip loses
           .orderBy(col("doc_id"))
       },
@@ -451,7 +451,7 @@ object DedupQueries {
         // exact-substring dedup accounting — see
         // [[graft.ext.Dedup.substringDupSpans]] for the algorithm and
         // the 100 TB shape (digest window + doc-keyed interval sweep,
-        // no pair generation). Live sort: ProfileSort A/B a wash at
+        // no pair generation). Live sort: live-vs-staged A/B a wash at
         // every scale (1.04 / 1.00 / 1.05), so the doc-scale output
         // keeps the simpler shape. PlanSpec pins the core via
         // substringDupSpans directly.
@@ -884,7 +884,7 @@ object DedupQueries {
           sum(col("n_tokens")).as("bin_tokens"),
           min(col("doc_id")).as("first_doc"))
         // live sort: bin-scale output over an already-staged s0/s1 —
-        // ProfileSort A/B put staged at 1.06x (1x) / 0.98 (x10), a wash
+        // live-vs-staged A/B put staged at 1.06x (1x) / 0.98 (x10), a wash
         .orderBy(col("shard"), col("bin_id"))
     },
     Some("WITH RECURSIVE " + CurationStagesSql + """,

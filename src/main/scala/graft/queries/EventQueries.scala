@@ -46,12 +46,12 @@ object EventQueries {
     */
   def mvMaintain(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     import graft.gold.AtomicTable
-    // top-level maintenance phases for ProfileQ93's cost attribution,
+    // top-level maintenance phases for tools.Profile's cost attribution,
     // through the shared AtomicTable sink (None = zero overhead)
     def ph[T](name: String)(body: => T): T = AtomicTable.phase(name)(body)
     val rootDir = java.nio.file.Files.createTempDirectory("q93-mv")
     // tracked like every other staged artifact: a bench run calls this
-    // twice and ProfileQ93 `repeat` times, each leaving a full
+    // twice and tools.Profile `--repeat` times, each leaving a full
     // AtomicTable snapshot history behind without the exit sweep
     graft.Staging.trackForCleanup(rootDir)
     val root = rootDir.toString
@@ -100,7 +100,7 @@ object EventQueries {
       // final write), and this source's lineage joins against the MV
       // table itself. An in-memory persist beats the r5-era parquet
       // checkpoint here: same execute-once guarantee, one fewer write
-      // job (ProfileQ93 put the staging round trip at ~0.3 s of the
+      // job (the phase profile put the staging round trip at ~0.3 s of the
       // q93a floor). partitionLocalKeys: mv_key embeds event_date, so
       // the prior-snapshot key scan (another ~0.3 s job) is skipped —
       // matched partitions are the delta's partitions by construction.

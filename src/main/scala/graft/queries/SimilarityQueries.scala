@@ -159,7 +159,7 @@ object SimilarityQueries {
     QueryDef(
       "q72_ann_lsh",
       (s, dir) =>
-        // live sort: ProfileSort A/B put the staged variant at 1.27x
+        // live sort: live-vs-staged A/B put the staged variant at 1.27x
         // (1x) / 1.11 (x10) — the bucket self-join over the staged
         // vectors is cheap enough that the resample costs less than a
         // pair round-trip. PlanSpec pins the core via lshNeighborPairs.

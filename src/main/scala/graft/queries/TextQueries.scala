@@ -457,7 +457,7 @@ object TextQueries {
           .withColumn("rnk", row_number().over(w).cast("bigint"))
           .filter(col("rnk") <= 3)
           .select(col("doc_id"), col("rnk"), col("tok"), col("tfidf"))
-          // live sort: ProfileSort A/B put the staged variant at
+          // live sort: live-vs-staged A/B put the staged variant at
           // 1.23x (1x) — the window's exchange absorbs the resample
           .orderBy(col("doc_id"), col("rnk"))
       },
@@ -664,7 +664,7 @@ object TextQueries {
     QueryDef(
       "q96_unigram_surprisal",
       (s, dir) =>
-        // live sort: ProfileSort A/B put the staged variant at 1.16x
+        // live sort: live-vs-staged A/B put the staged variant at 1.16x
         // (1x) / 1.09 (x10). PlanSpec pins the core via
         // LanguageModel.unigramSurprisal directly.
         graft.ext.LanguageModel.unigramSurprisal(

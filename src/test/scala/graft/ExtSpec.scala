@@ -99,6 +99,25 @@ class DedupSpec extends SparkSpec {
     assert(viaIndex === inc)
   }
 
+  test("incrementalDupPairs reads the staged candidate count from footers: " +
+      "no Spark job besides the staging write") {
+    import org.apache.spark.sql.functions.col
+    val newBatch = docs.filter(col("doc_id").isin(2L, 4L))
+    val existing = docs.filter(!col("doc_id").isin(2L, 4L))
+    var stageJobs = -1
+    val total = jobsRun(Dedup.incrementalDupPairs(newBatch, existing,
+      "doc_id", "text", threshold = 0.3, stager = { (df, tag) =>
+        var staged: org.apache.spark.sql.DataFrame = null
+        stageJobs = jobsRun { staged = graft.Staging.checkpoint(df, tag) }
+        staged
+      }))
+    // the inner jobsRun's marker job is the one extra job the outer
+    // count sees; a count() of the staged candidates would add its
+    // map-stage and result jobs on top
+    assert(stageJobs > 0)
+    assert(total === stageJobs + 1, s"total=$total staging=$stageJobs")
+  }
+
   test("connected components: string ids take the iterative path, not getLong") {
     val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y"))
       .toDF("doc_id_a", "doc_id_b")

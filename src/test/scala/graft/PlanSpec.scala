@@ -19,7 +19,7 @@ class PlanSpec extends SparkSpec {
     * assertions are about the operator shape, independent of the
     * registered query's presentation-sort policy (q65 stages its sort
     * via Staging.stagedSort, which would hide a registry plan behind
-    * a parquet scan; the others keep live sorts per the ProfileSort
+    * a parquet scan; the others keep live sorts per the live-vs-staged
     * A/B, but pinning the core keeps these tests policy-proof).
     */
   private def planOf(df: org.apache.spark.sql.DataFrame): String =

@@ -36,4 +36,32 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started while `body` ran. The listener bus is async:
+    * a one-task marker job runs after `body`, and the count is read
+    * once the bus delivers the marker's start — every earlier event
+    * has been delivered by then (the bus is FIFO).
+    */
+  def jobsRun(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = s"jobs-run-marker-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.job.description"))
+            .contains(marker)) seen.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 }
